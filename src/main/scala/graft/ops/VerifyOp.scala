@@ -3,12 +3,19 @@ package graft.ops
 import graft.core.Field
 import graft.core.FieldOps._
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import java.util.regex.Pattern
 
 /** One element of the per-record problems array. */
 final case class ProblemKD(kind: String, detail: String)
+
+/** A record's own id (`isId`) or one of its references, keyed by the
+  * id it names — the rows [[VerifyOp.missingReferences]] exchanges.
+  */
+private[ops] final case class RefTag(target: String, isId: Boolean, recordId: String,
+                                     via: String)
 
 /** The verify rule engine (reference src/verify.rs): per-record checks run
   * as ONE single-pass scalar function over the header multimap (see the
@@ -198,37 +205,34 @@ object VerifyOp {
   def missingReferences(records: DataFrame,
                         refFields: Seq[String] = Seq(
                           "WARC-Concurrent-To", "WARC-Refers-To", "WARC-Warcinfo-ID")): DataFrame = {
-    // ONE fields traversal per row for the id AND every reference field
-    // (insertion order preserved per field, like fieldGetAll). The
-    // union-of-three-scans form evaluated four interpreted HOF lookups,
-    // each re-inlining the caller's fields construction — 4 full scans
-    // of the record set for one anti-join probe side.
+    // ONE fields traversal per row tags the record's own id (isId) and
+    // each of its references (insertion order kept per field, like
+    // fieldGetAll) as rows keyed by target id; ONE exchange on that key
+    // then decides every reference in a sorted per-partition scan: it is
+    // missing when no id row shares its key. A null target has no id row
+    // and is always reported, as a left anti join would. Reading the
+    // records once needs no persisted projection (a per-call cache entry
+    // that no later call could match or release).
     val rfList = refFields
-    val idRefsUdf = udf { (fields: Seq[Row]) =>
+    // nondeterministic pins ONE evaluation per row: InferFiltersFromGenerate
+    // would otherwise re-run the UDF in a size() > 0 filter (see problems)
+    val tagUdf = udf { (fields: Seq[Row]) =>
       val rid = fields.find(_.getString(0).equalsIgnoreCase("WARC-Record-ID"))
         .map(_.getString(1)).orNull
       val refs = rfList.flatMap { rf =>
         fields.collect { case r if r.getString(0).equalsIgnoreCase(rf) =>
-          (rf, r.getString(1))
+          RefTag(r.getString(1), isId = false, rid, rf)
         }
       }
-      (rid, refs)
-    }
-    // both the id universe and the probe side read `base` — persist the
-    // narrow (position, id, refs) projection so the record scan + UDF
-    // runs once (guide §5)
-    val base = records.select(col("position"), idRefsUdf(col("fields")).as("ir"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ids = base.select(col("ir._1").as("target_id"))
-      .where(col("target_id").isNotNull)
-    val refs = base.select(col("position"), col("ir._1").as("record_id"),
-        explode(col("ir._2")).as("r"))
-      .select(col("position"), col("record_id"),
-        col("r._2").as("target_id"), col("r._1").as("via"))
-    refs.join(ids.distinct(), Seq("target_id"), "left_anti")
-      .select(col("position"), col("record_id"),
+      if (rid == null) refs else RefTag(rid, isId = true, rid, null) +: refs
+    }.asNondeterministic()
+    records.select(col("position"), explode(tagUdf(col("fields"))).as("t"))
+      .select(col("position"), col("t.*"))
+      .withColumn("has_id", max(col("isId")).over(Window.partitionBy(col("target"))))
+      .where(!col("isId") && !col("has_id"))
+      .select(col("position"), col("recordId").as("record_id"),
         lit("referenced_record_missing").as("kind"),
-        concat(col("via"), lit(" -> "), col("target_id")).as("detail"))
+        concat(col("via"), lit(" -> "), col("target")).as("detail"))
   }
 
   /** J2 — segment reassembly check (verify.rs:266-319): group continuation

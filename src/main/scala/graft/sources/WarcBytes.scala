@@ -53,16 +53,38 @@ object WarcBytes {
     */
   final class RecordParser(file: String) {
     private var buf = new Array[Byte](64 * 1024)
+    private var start = 0 // read cursor: buf(start) is the next record's first byte
     private var len = 0
-    private var base = 0L // uncompressed offset of buf(0)
+    private var base = 0L // uncompressed offset of buf(start)
     private val ready = scala.collection.mutable.Queue.empty[WarcRecord]
     /** Total records framed so far (valid mid-stream). */
     var recordsParsed: Long = 0L
 
+    /** Back to a fresh stream at offset 0, keeping the buffer: a decode
+      * loop builds one parser and resets it per member instead of
+      * allocating (and zeroing) a new buffer per record.
+      */
+    def reset(): Unit = {
+      start = 0
+      len = 0
+      base = 0L
+      ready.clear()
+      recordsParsed = 0L
+    }
+
     def append(chunk: Array[Byte], off: Int, n: Int): Unit = {
+      // consumed records are dropped here, once per append: shifting the
+      // tail after every record is quadratic on a whole-buffer feed
+      if (start > 0 && len + n > buf.length) {
+        System.arraycopy(buf, start, buf, 0, len - start)
+        len -= start
+        start = 0
+      }
       if (len + n > buf.length) {
         val grown = new Array[Byte](math.max(buf.length * 2, len + n))
-        System.arraycopy(buf, 0, grown, 0, len)
+        System.arraycopy(buf, start, grown, 0, len - start)
+        len -= start
+        start = 0
         buf = grown
       }
       System.arraycopy(chunk, off, buf, len, n)
@@ -76,17 +98,17 @@ object WarcBytes {
     /** True when no partial record is buffered and nothing is queued —
       * i.e. the stream sits exactly on a record boundary.
       */
-    def atRecordBoundary: Boolean = len == 0
+    def atRecordBoundary: Boolean = len == start
 
     /** End of stream: any leftover bytes are a framing error. */
     def finish(): Unit =
-      require(len == 0, s"truncated block at offset $base")
+      require(len == start, s"truncated block at offset $base")
 
     private def indexOfTerminator(limit: Int): Int = {
-      var i = 0
+      var i = start
       while (i + 4 <= limit) {
         if (buf(i) == '\r' && buf(i + 1) == '\n' && buf(i + 2) == '\r' && buf(i + 3) == '\n')
-          return i
+          return i - start
         i += 1
       }
       -1
@@ -96,15 +118,15 @@ object WarcBytes {
       var progress = true
       while (progress) {
         progress = false
+        val avail = len - start
         val headerEnd = indexOfTerminator(len)
         if (headerEnd < 0) {
-          require(len <= MaxHeaderLen + 4, s"missing header terminator at offset $base")
+          require(avail <= MaxHeaderLen + 4, s"missing header terminator at offset $base")
         } else {
           // the cap applies even when a terminator IS eventually found —
           // the reference treats any header block past 32 KiB as malformed
           require(headerEnd <= MaxHeaderLen, s"header exceeds $MaxHeaderLen bytes at offset $base")
-          val headerBytes = java.util.Arrays.copyOfRange(buf, 0, headerEnd + 4)
-          val (version, fields) = HeaderSerde.parse(headerBytes)
+          val (version, fields) = HeaderSerde.parse(buf, start, headerEnd + 4)
             .getOrElse(throw new IllegalArgumentException(s"bad header at offset $base"))
           val lenStr = fields.find(_.name.equalsIgnoreCase("Content-Length")).map(_.value)
             .getOrElse(throw new IllegalArgumentException(s"no Content-Length at offset $base"))
@@ -118,19 +140,19 @@ object WarcBytes {
             s"Content-Length $blockLenL exceeds supported block size at offset $base")
           val blockLen = blockLenL.toInt
           val blockStart = headerEnd + 4
-          if (blockStart + blockLen + 4 <= len) {
-            val block = java.util.Arrays.copyOfRange(buf, blockStart, blockStart + blockLen)
+          if (blockStart + blockLen + 4 <= avail) {
+            val from = start + blockStart
+            val block = java.util.Arrays.copyOfRange(buf, from, from + blockLen)
             var t = 0
             while (t < 4) {
-              require(buf(blockStart + blockLen + t) == HeaderTerminator(t),
+              require(buf(from + blockLen + t) == HeaderTerminator(t),
                 s"missing record terminator at offset ${base + blockStart + blockLen}")
               t += 1
             }
             ready += WarcRecord(base, file, version, fields, block)
             recordsParsed += 1
             val consumed = blockStart + blockLen + 4
-            System.arraycopy(buf, consumed, buf, 0, len - consumed)
-            len -= consumed
+            start += consumed
             base += consumed
             progress = true
           }
@@ -223,7 +245,7 @@ object WarcBytes {
         if (pos >= bytes.length) { parser.finish(); finished = true }
         else {
           val before = parser.recordsParsed
-          pos = inflateMember(bytes, pos, parser, gzScratch)
+          pos = inflateMember(bytes, pos, bytes.length, parser, gzScratch)
           // record-at-time contract: one record per member, boundary-aligned
           if (!(parser.atRecordBoundary && parser.recordsParsed == before + 1))
             ratFault = true
@@ -301,11 +323,6 @@ object WarcBytes {
     }
   }
 
-  /** Inflate exactly one gzip member starting at `pos`, streaming 64 KiB
-    * chunks into `parser`; returns the offset just past the member's
-    * trailer (the reference's start_next_segment bookkeeping,
-    * compress.rs:174-196, decode.rs:733-753).
-    */
   /** Reusable per-task decode scratch: one native Inflater + one output
     * buffer for a whole member LOOP. A record-at-time archive holds one
     * gzip member per record — allocating a fresh Inflater (a native
@@ -319,27 +336,31 @@ object WarcBytes {
     val buf = new Array[Byte](65536)
   }
 
-  private[sources] def inflateMember(bytes: Array[Byte], pos0: Int,
-                                     parser: RecordParser,
-                                     scratch: InflateScratch = null): Int = {
-    require(pos0 + 2 <= bytes.length &&
+  /** Inflate exactly one gzip member starting at `pos0`, streaming 64 KiB
+    * chunks into `parser`; returns the offset just past the member's
+    * trailer (the reference's start_next_segment bookkeeping,
+    * compress.rs:174-196, decode.rs:733-753). Only `bytes[0, lim)` is
+    * read (a read window may hold fewer valid bytes than its capacity);
+    * `errBase` is added to the offsets in error messages so a window
+    * reports file offsets.
+    */
+  private[sources] def inflateMember(bytes: Array[Byte], pos0: Int, lim: Int,
+                                     parser: RecordParser, scratch: InflateScratch,
+                                     errBase: Long = 0L): Int = {
+    require(pos0 + 2 <= lim &&
       bytes(pos0) == GzipMagic(0) && bytes(pos0 + 1) == GzipMagic(1),
-      s"bad gzip magic at offset $pos0")
-    var pos = skipGzipHeader(bytes, pos0 + 2)
-    val local = scratch == null
-    val s = if (local) new InflateScratch else scratch
-    val inf = s.inf
+      s"bad gzip magic at offset ${errBase + pos0}")
+    var pos = skipGzipHeader(bytes, pos0 + 2, lim)
+    val inf = scratch.inf
     inf.reset() // clean stream state even after a prior member threw
-    try {
-      inf.setInput(bytes, pos, bytes.length - pos)
-      while (!inf.finished()) {
-        val n = inf.inflate(s.buf)
-        if (n > 0) parser.append(s.buf, 0, n)
-        else if (inf.needsInput()) throw new EOFException(s"truncated deflate data at $pos")
-      }
-      pos += inf.getBytesRead.toInt
-    } finally { if (local) inf.end() }
-    require(pos + 8 <= bytes.length, s"truncated gzip trailer at offset $pos")
+    inf.setInput(bytes, pos, lim - pos)
+    while (!inf.finished()) {
+      val n = inf.inflate(scratch.buf)
+      if (n > 0) parser.append(scratch.buf, 0, n)
+      else if (inf.needsInput()) throw new EOFException(s"truncated deflate data at ${errBase + pos}")
+    }
+    pos += inf.getBytesRead.toInt
+    require(pos + 8 <= lim, s"truncated gzip trailer at offset ${errBase + pos}")
     pos + 8 // CRC32 + ISIZE
   }
 
@@ -446,7 +467,7 @@ object WarcBytes {
       require(pos + 2 <= bytes.length &&
         bytes(pos) == GzipMagic(0) && bytes(pos + 1) == GzipMagic(1),
         s"bad gzip magic at offset $pos")
-      pos = skipGzipHeader(bytes, pos + 2)
+      pos = skipGzipHeader(bytes, pos + 2, bytes.length)
       val inf = new Inflater(true)
       inf.setInput(bytes, pos, bytes.length - pos)
       val buf = new Array[Byte](65536)
@@ -626,9 +647,9 @@ object WarcBytes {
   /** Skip a gzip member header starting AFTER the 2 magic bytes; returns
     * the offset of the deflate data.
     */
-  private[sources] def skipGzipHeader(bytes: Array[Byte], start: Int): Int = {
+  private[sources] def skipGzipHeader(bytes: Array[Byte], start: Int, lim: Int): Int = {
     def u8(i: Int): Int = {
-      if (i >= bytes.length) throw new EOFException("truncated gzip header")
+      if (i >= lim) throw new EOFException("truncated gzip header")
       bytes(i) & 0xff
     }
     var pos = start
@@ -642,6 +663,9 @@ object WarcBytes {
     if ((flg & 0x08) != 0) { while (u8(pos) != 0) pos += 1; pos += 1 } // FNAME
     if ((flg & 0x10) != 0) { while (u8(pos) != 0) pos += 1; pos += 1 } // FCOMMENT
     if ((flg & 0x02) != 0) pos += 2 // FHCRC
+    // fixed-size parts are skipped unread: a header cut inside one ends
+    // past the readable bytes
+    if (pos > lim) throw new EOFException("truncated gzip header")
     pos
   }
 }

@@ -41,14 +41,19 @@ import java.util.zip.Inflater
   * against it — the dictionary is crawl-shared state exactly like a
   * robots broadcast, not a reason to serialize the file.
   *
-  * Memory per task: one range buffer (≤ splitBytes + the format's
-  * validation tail: 1 KiB gzip, 256 KiB zstd) + one record. Plain files
-  * fall back to [[WarcSource.read]] (per-file parallelism).
+  * Memory per task: one window + one record, whatever `splitBytes` is.
+  * A task reads its range through one stream into a fixed 256 KiB
+  * window that slides forward over the file; it grows only while one
+  * member is larger than it (up to `maxRecordBytes`). One record framer,
+  * one Inflater and one zstd context are reused for every member of the
+  * range. Plain files fall back to [[WarcSource.read]] (per-file
+  * parallelism).
   */
 object WarcSplit {
 
-  /** Pad read past a range end so a boundary just before `end` can be
-    * VALIDATED (gzip header + enough deflate to prove "WARC/").
+  /** Bytes a gzip candidate needs behind it to be VALIDATED (gzip
+    * header + enough deflate to prove "WARC/"), also when it starts just
+    * before its range end.
     */
   private val ValidationTail = 1024
 
@@ -58,26 +63,39 @@ object WarcSplit {
     * the member's whole first block past the boundary — 1 KiB of
     * deflate-style lookahead would silently SKIP such members (losing
     * their records from every task). 256 KiB covers any legal block
-    * plus frame header at negligible cost vs the ≥2 MiB split size.
+    * plus frame header.
     */
   private val ZstdValidationTail = 256 << 10
 
   private def tailFor(format: String): Int =
     if (format == "zstd") ZstdValidationTail else ValidationTail
 
+  /** Read window of a range task. Below G1's humongous-object threshold
+    * (half a heap region, 512 KiB at the smallest region size), so the
+    * window is an ordinary young-generation array, and no smaller than
+    * [[ZstdValidationTail]], so a window starting at a candidate always
+    * holds that candidate's validation bytes.
+    */
+  private val WindowBytes = 256 << 10
+
+  private def hasMagic(buf: Array[Byte], i: Int, lim: Int, format: String): Boolean =
+    if (format == "zstd")
+      i + 4 <= lim && buf(i) == WarcBytes.ZstdMagic(0) && buf(i + 1) == WarcBytes.ZstdMagic(1) &&
+        buf(i + 2) == WarcBytes.ZstdMagic(2) && buf(i + 3) == WarcBytes.ZstdMagic(3)
+    else i + 3 <= lim && buf(i) == WarcBytes.GzipMagic(0) && buf(i + 1) == WarcBytes.GzipMagic(1) &&
+      buf(i + 2) == 8
+
   /** True when `buf(i)` starts a genuine record-at-time member: gzip
     * magic + deflate method, and the member's first plaintext bytes are
-    * `WARC/`. Insufficient bytes to prove it → false (caller re-reads
-    * with more tail if it matters).
+    * `WARC/`. Only `buf[0, lim)` is read; too few bytes to prove it →
+    * false (the caller retries with the full validation tail).
     */
-  private[graft] def isMemberStart(buf: Array[Byte], i: Int): Boolean =
-    i + 10 <= buf.length &&
-      buf(i) == WarcBytes.GzipMagic(0) && buf(i + 1) == WarcBytes.GzipMagic(1) &&
-      buf(i + 2) == 8 && {
+  private[graft] def isMemberStart(buf: Array[Byte], i: Int, lim: Int): Boolean =
+    i + 10 <= lim && hasMagic(buf, i, lim, "gzip") && {
         val inf = new Inflater(true)
         try {
-          val dataStart = WarcBytes.skipGzipHeader(buf, i + 2)
-          inf.setInput(buf, dataStart, math.min(buf.length - dataStart, ValidationTail))
+          val dataStart = WarcBytes.skipGzipHeader(buf, i + 2, lim)
+          inf.setInput(buf, dataStart, math.min(lim - dataStart, ValidationTail))
           val out = new Array[Byte](5)
           var got = 0
           var stuck = false
@@ -95,13 +113,11 @@ object WarcSplit {
     * compressed data, or a dictionary payload inside a skippable frame,
     * fails the decode-prefix check). Insufficient bytes → false.
     */
-  private[graft] def isZstdMemberStart(buf: Array[Byte], i: Int,
-                                       dict: Option[Array[Byte]] = None): Boolean =
-    i + 4 <= buf.length &&
-      buf(i) == WarcBytes.ZstdMagic(0) && buf(i + 1) == WarcBytes.ZstdMagic(1) &&
-      buf(i + 2) == WarcBytes.ZstdMagic(2) && buf(i + 3) == WarcBytes.ZstdMagic(3) && {
+  private[graft] def isZstdMemberStart(buf: Array[Byte], i: Int, lim: Int,
+                                       dict: Option[Array[Byte]]): Boolean =
+    hasMagic(buf, i, lim, "zstd") && {
         val in = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
-          new java.io.ByteArrayInputStream(buf, i, buf.length - i))
+          new java.io.ByteArrayInputStream(buf, i, lim - i))
         try {
           dict.foreach(in.setDict)
           val out = new Array[Byte](5)
@@ -116,69 +132,109 @@ object WarcSplit {
         finally in.close()
       }
 
-  /** Index of the first validated member start at-or-after `from`;
-    * -1 when none exists in the buffer.
+  /** A sliding read window over one file: `buf[0, len)` holds the file
+    * bytes `[start, start + len)`. `readAt(off, dst, dstOff, n)` must
+    * fill `dst[dstOff, dstOff + n)` with the file bytes `[off, off + n)`.
     */
-  private[graft] def findMemberStart(buf: Array[Byte], from: Int,
-                                     format: String = "gzip",
-                                     dict: Option[Array[Byte]] = None): Int = {
-    var i = math.max(from, 0)
-    if (format == "zstd") {
-      while (i + 4 <= buf.length) {
-        if (buf(i) == WarcBytes.ZstdMagic(0) && buf(i + 1) == WarcBytes.ZstdMagic(1) &&
-          buf(i + 2) == WarcBytes.ZstdMagic(2) && buf(i + 3) == WarcBytes.ZstdMagic(3) &&
-          isZstdMemberStart(buf, i, dict)) return i
-        i += 1
-      }
-    } else {
-      while (i + 3 <= buf.length) {
-        if (buf(i) == 0x1f.toByte && buf(i + 1) == 0x8b.toByte && buf(i + 2) == 8 &&
-          isMemberStart(buf, i)) return i
-        i += 1
-      }
+  private final class Window(readAt: (Long, Array[Byte], Int, Int) => Unit,
+                             fileLen: Long, capacity: Int) {
+    var buf = new Array[Byte](capacity)
+    var start = 0L
+    var len = 0
+    def end: Long = start + len
+    def atEof: Boolean = end >= fileLen
+
+    /** Move the window to begin at `to`, keeping the bytes it already
+      * holds from there on; a larger `cap` grows it.
+      */
+    def slide(to: Long, cap: Int = buf.length): Unit = {
+      val keep = if (to >= start && to < end) (end - to).toInt else 0
+      val dst = if (cap > buf.length) new Array[Byte](cap) else buf
+      if (keep > 0) System.arraycopy(buf, (to - start).toInt, dst, 0, keep)
+      buf = dst
+      val n = math.min(buf.length.toLong, fileLen - to).toInt
+      if (n > keep) readAt(to + keep, buf, keep, n - keep)
+      start = to
+      len = n
     }
-    -1
+
+    /** Make the window hold `[p, p + n)` (or `[p, EOF)`): slide to `p`,
+      * growing only when `n` exceeds the window.
+      */
+    def ensure(p: Long, n: Int): Unit =
+      if (p < start || p + n > end && !atEof)
+        slide(p, math.max(buf.length.toLong, math.min(n.toLong, fileLen - p)).toInt)
   }
 
-  /** Decode every member whose start offset lies in [start, end).
-    * `readRange(off, n)` must return exactly the file bytes [off, off+n).
-    * A member extending past the buffered range triggers a targeted
-    * re-read from the member start with geometric growth up to
+  /** File offset of the first validated member start in `[from, endB)`;
+    * -1 when there is none. A candidate validated with fewer than the
+    * format's tail bytes behind it (a window edge, not the file end) is
+    * re-validated from a window starting at it before it is rejected.
+    */
+  private def firstMemberStart(w: Window, from: Long, endB: Long, format: String,
+                               dict: Option[Array[Byte]]): Long = {
+    val tail = tailFor(format)
+    def isStart(i: Int): Boolean =
+      if (format == "zstd") isZstdMemberStart(w.buf, i, w.len, dict)
+      else isMemberStart(w.buf, i, w.len)
+    var p = from
+    while (p < endB) {
+      w.ensure(p, 4)
+      val i = (p - w.start).toInt
+      if (hasMagic(w.buf, i, w.len, format)) {
+        if (isStart(i)) return p
+        if (w.end - p < tail && !w.atEof) {
+          w.ensure(p, tail)
+          if (isStart(0)) return p
+        }
+      }
+      p += 1
+    }
+    -1L
+  }
+
+  /** Decode every member whose start offset lies in [start, end),
+    * reading the file through one window of `windowBytes`. A member
+    * that runs past the window edge slides the window to the member
+    * start; one larger than the window grows it geometrically up to
     * `maxRecordBytes` (the [[WarcSource.get]] window discipline).
     */
-  private[graft] def decodeRange(readRange: (Long, Int) => Array[Byte], fileLen: Long,
+  private[graft] def decodeRange(readAt: (Long, Array[Byte], Int, Int) => Unit, fileLen: Long,
                                    start: Long, end: Long, file: String,
                                    maxRecordBytes: Int = 64 << 20,
                                    format: String = "gzip",
                                    dict: Option[Array[Byte]] = None,
-                                   contentStart: Long = 0L): Iterator[WarcRecord] = {
+                                   contentStart: Long = 0L,
+                                   windowBytes: Int = WindowBytes): Iterator[WarcRecord] = {
     // ranges are laid out over the whole file; content begins after any
     // leading dictionary frame, so a task whose range starts earlier
     // clamps (a range entirely inside the head frame owns nothing)
     val startC = math.max(start, contentStart)
     if (startC >= fileLen || startC >= end) return Iterator.empty
     val endB = math.min(end, fileLen)
-    var bufStart = startC
-    var buf = readRange(startC,
-      (math.min(endB + tailFor(format), fileLen) - startC).toInt)
+    // never larger than the bytes the range and its validation tail span
+    val w = new Window(readAt, fileLen, math.max(1L, math.min(windowBytes.toLong,
+      math.min(endB + tailFor(format), fileLen) - startC)).toInt)
+    w.slide(startC)
 
     val first =
       if (start == 0L && contentStart == 0L) {
-        require(buf.length >= 2 && WarcBytes.detectFormat(buf) == format,
+        require(w.len >= 2 &&
+          WarcBytes.detectFormat(java.util.Arrays.copyOf(w.buf, math.min(w.len, 8))) == format,
           s"$file: head magic is not $format (use WarcSource.read)")
         0L
       } else if (startC == contentStart && startC > start) {
         // first content byte: trust the driver's head-frame parse — the
         // first member starts exactly here (validated on decode anyway)
         startC
-      } else {
-        val rel = findMemberStart(buf, 0, format, dict)
-        if (rel < 0 || startC + rel >= endB) -1L else startC + rel
-      }
+      } else firstMemberStart(w, startC, endB, format, dict)
 
     new Iterator[WarcRecord] {
       private var abs = first
       private val pending = scala.collection.mutable.Queue.empty[WarcRecord]
+      // one framer for the whole range, reset per member: a framer per
+      // member would zero a 64 KiB buffer per ~2 KiB member
+      private val parser = new WarcBytes.RecordParser(file)
       // one Inflater + output buffer for the whole range (reset between
       // members): per-member native init/free dominated ~2 KiB members
       private lazy val gzScratch = new WarcBytes.InflateScratch
@@ -188,39 +244,40 @@ object WarcSplit {
       private lazy val zsScratch = new WarcBytes.ZstdScratch(dict)
 
       /** Decode one member (gzip) / one frame after any skippable
-        * frames (zstd) at buffer offset `rel`; appends plaintext into
+        * frames (zstd) at window offset `rel`; appends plaintext into
         * `parser`, returns the offset just past it. Truncation by the
-        * buffer edge throws EOFException so the caller grows the window.
+        * window edge throws EOFException so the caller re-reads.
         */
-      private def decodeOneMember(rel0: Int, parser: WarcBytes.RecordParser): Int =
+      private def decodeOneMember(rel0: Int): Int = {
+        val buf = w.buf
+        val lim = w.len
         if (format == "zstd") {
           var rel = rel0
           // mid-stream skippable frames carry no records: skip them (the
           // LEADING dictionary frame was parsed by readSplit and sits
           // before contentStart, so no task ever decodes through it)
-          while (rel + 8 <= buf.length &&
+          while (rel + 8 <= lim &&
                  (WarcBytes.readLe32(buf, rel) & 0xfffffff0) == 0x184d2a50) {
             val skipLen = WarcBytes.readLe32(buf, rel + 4) & 0xffffffffL
             val next = rel.toLong + 8L + skipLen
-            if (next > buf.length) throw new EOFException(
-              s"$file: skippable frame at ${bufStart + rel} runs past buffer")
+            if (next > lim) throw new EOFException(
+              s"$file: skippable frame at ${w.start + rel} runs past buffer")
             rel = next.toInt
           }
-          if (rel >= buf.length) {
-            if (bufStart + rel >= fileLen) rel // trailing skippables at EOF
+          if (rel >= lim) {
+            if (w.start + rel >= fileLen) rel // trailing skippables at EOF
             else throw new EOFException(
-              s"$file: frame head at ${bufStart + rel} truncated")
+              s"$file: frame head at ${w.start + rel} truncated")
           } else {
             val fsize =
-              try com.github.luben.zstd.Zstd.findFrameCompressedSize(
-                buf, rel, buf.length - rel)
+              try com.github.luben.zstd.Zstd.findFrameCompressedSize(buf, rel, lim - rel)
               catch { case _: RuntimeException =>
                 throw new EOFException(
-                  s"$file: zstd frame at ${bufStart + rel} undecodable in buffer")
+                  s"$file: zstd frame at ${w.start + rel} undecodable in buffer")
               }
-            if (fsize <= 0 || rel + fsize > buf.length)
+            if (fsize <= 0 || rel + fsize > lim)
               throw new EOFException(
-                s"$file: zstd frame at ${bufStart + rel} runs past buffer")
+                s"$file: zstd frame at ${w.start + rel} runs past buffer")
             // one-shot static decompress when the frame pledges its size
             // (our encoder always does) — a per-frame ZstdInputStream's
             // native init dominated the split decode (see
@@ -229,36 +286,38 @@ object WarcSplit {
               chunk = null, scratch = zsScratch)
             rel + fsize.toInt
           }
-        } else WarcBytes.inflateMember(buf, rel0, parser, gzScratch)
+        } else WarcBytes.inflateMember(buf, rel0, lim, parser, gzScratch, w.start)
+      }
 
       private def decodeMemberAt(offset: Long): Unit = {
-        var window = (bufStart + buf.length - offset).toInt
+        w.ensure(offset, 1)
         var done = false
         while (!done) {
-          val rel = (offset - bufStart).toInt
-          val parser = new WarcBytes.RecordParser(file)
+          val rel = (offset - w.start).toInt
+          parser.reset()
           try {
-            val relNext = decodeOneMember(rel, parser)
+            val relNext = decodeOneMember(rel)
             parser.finish() // record-at-time: member ends ON a boundary
             var r = parser.next()
-            require(r.nonEmpty || bufStart + relNext >= fileLen,
+            require(r.nonEmpty || w.start + relNext >= fileLen,
               s"$file: empty member at offset $offset")
             while (r.nonEmpty) { // tolerate multi-record members like read()
               pending += r.get.copy(position = offset)
               r = parser.next()
             }
-            abs = bufStart + relNext
+            abs = w.start + relNext
             done = true
           } catch {
             case e @ (_: EOFException | _: IllegalArgumentException) =>
-              // truncated by the buffer edge vs genuinely malformed: only
-              // a re-read with more bytes can tell — grow geometrically
-              val atFileEnd = bufStart + buf.length >= fileLen
-              if (atFileEnd || window >= maxRecordBytes) throw e
-              window = math.min(math.max(window * 2, 1 << 20),
-                math.min(fileLen - offset, maxRecordBytes.toLong).toInt)
-              buf = readRange(offset, window)
-              bufStart = offset
+              // truncated by the window edge vs genuinely malformed: only
+              // a re-read with more bytes can tell. A member crossing the
+              // edge slides the window to it; a member filling the whole
+              // window grows it
+              if (w.atEof) throw e
+              if (rel > 0) w.slide(offset)
+              else if (w.len >= maxRecordBytes) throw e
+              else w.slide(offset, math.min(w.len * 2L,
+                math.min(fileLen - offset, maxRecordBytes.toLong)).toInt)
           }
         }
       }
@@ -362,13 +421,15 @@ object WarcSplit {
         // the cluster's fs.* settings from the classpath
         val p = new org.apache.hadoop.fs.Path(s.file)
         val efs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        def readRange(off: Long, n: Int): Array[Byte] = {
-          val a = new Array[Byte](n)
-          val in = efs.open(p)
-          try { in.seek(off); in.readFully(a) } finally in.close()
-          a
+        // one stream per range, closed with the task; the window reads
+        // forward through it, so a seek is rare
+        val in = efs.open(p)
+        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        def readAt(off: Long, dst: Array[Byte], dstOff: Int, n: Int): Unit = {
+          if (in.getPos != off) in.seek(off)
+          in.readFully(dst, dstOff, n)
         }
-        decodeRange(readRange, s.fileLen, s.start, s.end, s.file,
+        decodeRange(readAt, s.fileLen, s.start, s.end, s.file,
           maxRecordBytes, s.format, dictBc.value.get(s.file), s.contentStart)
       }
     spark.createDataset(rdd)
@@ -377,11 +438,6 @@ object WarcSplit {
   def readSplit(spark: SparkSession, file: String, splitBytes: Long = 128L << 20,
                 maxRecordBytes: Int = 64 << 20): Dataset[WarcRecord] = {
     require(splitBytes > 0, "splitBytes must be positive")
-    // each task buffers its whole range (+ validation tail) in one array:
-    // fail with the sizing story, not a negative-array-size surprise
-    require(splitBytes <= Int.MaxValue.toLong - ZstdValidationTail - 8,
-      s"splitBytes=$splitBytes exceeds the per-task buffer limit " +
-        "(one JVM array per range); use more, smaller splits")
     val path = new org.apache.hadoop.fs.Path(file)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fileLen = fs.getFileStatus(path).getLen
@@ -393,8 +449,8 @@ object WarcSplit {
     * `glob`, split into byte-range tasks in ONE task cloud — the
     * bounded-memory fleet reader. [[WarcSource.read]] buffers each whole
     * file (Spark `binaryFile`, capped at 2 GiB and one task per file);
-    * this path holds at most `splitBytes` + a validation tail + one
-    * record per task regardless of archive size, and a directory of
+    * this path holds one read window + one record per task regardless
+    * of archive and split size, and a directory of
     * multi-GB archives saturates a cluster instead of |files| cores.
     * `position` is the compressed member offset per the object doc.
     */
@@ -402,11 +458,6 @@ object WarcSplit {
                    splitBytes: Long = 128L << 20,
                    maxRecordBytes: Int = 64 << 20): Dataset[WarcRecord] = {
     require(splitBytes > 0, "splitBytes must be positive")
-    // each task buffers its whole range (+ validation tail) in one array:
-    // fail with the sizing story, not a negative-array-size surprise
-    require(splitBytes <= Int.MaxValue.toLong - ZstdValidationTail - 8,
-      s"splitBytes=$splitBytes exceeds the per-task buffer limit " +
-        "(one JVM array per range); use more, smaller splits")
     val base = new org.apache.hadoop.fs.Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.globStatus(new org.apache.hadoop.fs.Path(base, glob))

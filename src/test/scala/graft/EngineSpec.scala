@@ -500,6 +500,43 @@ class VerifyOpSpec extends AnyFunSuite {
     assert(VerifyOp.segmentProblems(records).count() == 0)
   }
 
+  test("missing references: anti-join rows incl. null ids and null targets; " +
+    "decoded once, no cache entry left") {
+    def rec(pos: Long, fields: (String, String)*) =
+      (pos, "f", "WARC/1.1", fields.map { case (n, v) => Field(n, v) })
+    val input = Seq(
+      rec(1, "WARC-Record-ID" -> "<a>", "WARC-Concurrent-To" -> "<b>",
+        "WARC-Concurrent-To" -> "<zz>"),
+      rec(2, "WARC-Record-ID" -> "<b>", "warc-refers-to" -> "<a>",
+        "WARC-Warcinfo-ID" -> "<missing>"),
+      rec(3, "WARC-Refers-To" -> "<a>", "WARC-Refers-To" -> "<gone>"), // no id
+      rec(4, "WARC-Record-ID" -> null, "WARC-Concurrent-To" -> "<b>"), // null id
+      rec(5, "WARC-Record-ID" -> "<e>", "WARC-Refers-To" -> null), // null target
+      rec(6, "WARC-Record-ID" -> "<a>", "WARC-Warcinfo-ID" -> "<zz>"), // duplicate id
+      rec(7, "WARC-Record-ID" -> "<g>", "WARC-Record-ID" -> "<zz>") // first id counts
+    )
+    // every read of the input counts its rows: one call must read it once
+    val reads = spark.sparkContext.longAccumulator("missing-refs reads")
+    val df = spark.sparkContext.parallelize(input, 2).map { r => reads.add(1); r }
+      .toDF("position", "file", "version", "fields")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getString(2),
+        Option(r.getString(3)))).sortBy(_.toString).toSeq
+    val kind = "referenced_record_missing"
+    assert(rows(VerifyOp.missingReferences(df)) == Seq(
+      (1L, Some("<a>"), kind, Some("WARC-Concurrent-To -> <zz>")),
+      (2L, Some("<b>"), kind, Some("WARC-Warcinfo-ID -> <missing>")),
+      (3L, None, kind, Some("WARC-Refers-To -> <gone>")),
+      (5L, Some("<e>"), kind, None),
+      (6L, Some("<a>"), kind, Some("WARC-Warcinfo-ID -> <zz>"))).sortBy(_.toString))
+    assert(reads.sum == input.size)
+    assert(rows(VerifyOp.missingReferences(df, Seq("WARC-Refers-To"))) == Seq(
+      (3L, None, kind, Some("WARC-Refers-To -> <gone>")),
+      (5L, Some("<e>"), kind, None)).sortBy(_.toString))
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+  }
+
   test("positions are exact cumulative serialized offsets (test_decode.rs:77-78)") {
     val recs = Synth.warcRecords(round = 1, n = 20)
     var expect = 0L

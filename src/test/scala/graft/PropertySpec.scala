@@ -199,12 +199,12 @@ class PropertySpec extends AnyFunSuite {
       // dict frame = magic(4) + size(4) + payload — content starts after it
       val contentStart = if (mode == 2) 8L + le32(bytes, 4) else 0L
       val fileLen = bytes.length.toLong
-      def readRange(off: Long, len: Int): Array[Byte] =
-        java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
+      def readAt(off: Long, dst: Array[Byte], dstOff: Int, len: Int): Unit =
+        System.arraycopy(bytes, off.toInt, dst, dstOff, len)
       val splitBytes = sample(Gen.chooseNum(100L, 4000L), 9100L + i)
       val nSplits = math.max(1L, (fileLen + splitBytes - 1) / splitBytes).toInt
       val got = (0 until nSplits).flatMap { k =>
-        WarcSplit.decodeRange(readRange, fileLen, k * splitBytes,
+        WarcSplit.decodeRange(readAt, fileLen, k * splitBytes,
           math.min((k + 1L) * splitBytes, fileLen), "s",
           format = format, dict = dict, contentStart = contentStart).toSeq
       }
@@ -230,6 +230,56 @@ class PropertySpec extends AnyFunSuite {
       val parsed = HeaderSerde.parse(HeaderSerde.serialize("WARC/1.1", fields))
       assert(parsed.contains(("WARC/1.1", fields)), s"i=$i")
     }
+  }
+
+  test("header byte-level fast path == general decode/unfold/split path") {
+    def utf8(s: String) = s.getBytes("UTF-8")
+    // pieces that steer inputs into every branch of both paths: non-ASCII,
+    // a literal U+FFFD, malformed UTF-8, CRLF and bare-LF folds, bare LF
+    // and CR inside values, colon-less lines, control characters that
+    // trim removes, empty values
+    val pieces: Vector[Array[Byte]] = Vector(
+      "\r\n", "\r\n", "\r\n", "\n", "\r", "\r\n ", "\r\n\t", "\n ", "\n\t",
+      ":", ": ", ":", "Name", "WARC-Type", "value", "v a l", " ", "\t", "\u0000", "\u0001",
+      "\u001f", "\u007f", "é", "\uFFFD", "漢", "WARC/1.1").map(utf8) ++
+      Vector(Array(0xff.toByte), Array(0xc3.toByte), Array(0xed.toByte, 0xa0.toByte, 0x80.toByte))
+    val pieceGen = Gen.oneOf(pieces)
+    val nameGen = Gen.oneOf("WARC-Type", "Content-Length", "X", "x", "A b")
+    // a field line: name, colon, value, each possibly salted with pieces
+    val lineGen = for {
+      pre <- Gen.listOfN(2, Gen.frequency(40 -> Gen.const(Array.emptyByteArray), 1 -> pieceGen))
+      name <- nameGen
+      colon <- Gen.frequency(8 -> Gen.const(": "), 1 -> Gen.const(":"), 1 -> Gen.const(""))
+      value <- Gen.oneOf("", "v", "  padded  ", "<urn:uuid:1>", "a:b")
+      mid <- Gen.listOfN(2, Gen.frequency(30 -> Gen.const(Array.emptyByteArray), 1 -> pieceGen))
+    } yield pre.flatten.toArray ++ utf8(name + colon) ++ mid.head ++ utf8(value) ++ mid(1) ++
+      utf8("\r\n")
+    val structured = for {
+      version <- Gen.frequency(8 -> Gen.const("WARC/1.1"), 1 -> Gen.const("WARC/"),
+        1 -> Gen.const("warc/1.1"), 1 -> Gen.const("WAR"))
+      n <- Gen.choose(0, 8)
+      lines <- Gen.listOfN(n, lineGen)
+      dup <- Gen.oneOf(true, false) // duplicate names: the header is a multimap
+      end <- Gen.oneOf("\r\n", "", "\r\nafter: blank\r\n")
+    } yield utf8(version + "\r\n") ++ (if (dup) lines ++ lines.take(1) else lines).flatten ++
+      utf8(end)
+    val soup = Gen.listOf(pieceGen).map(ps => utf8("WARC/1.1\r\n") ++ ps.flatten)
+    var fast = 0
+    var fastSome = 0
+    for (i <- 0 until 2000) {
+      val b = sample(if (i % 4 == 3) soup else structured, 40000L + i)
+      val want = HeaderSerde.parseGeneral(b, 0, b.length)
+      assert(HeaderSerde.parse(b) == want, s"i=$i ${new String(b, "ISO-8859-1")}")
+      // the (array, offset, length) form the record framer uses
+      val padded = utf8("xx\r\n") ++ b ++ utf8("\r\nWARC/")
+      assert(HeaderSerde.parse(padded, 4, b.length) == want, s"i=$i offset form")
+      val plain = b.forall(_ >= 0) &&
+        !b.indices.exists(j => b(j) == '\n' && j + 1 < b.length && (b(j + 1) == ' ' || b(j + 1) == '\t'))
+      if (plain) { fast += 1; if (want.isDefined) fastSome += 1 }
+    }
+    // both outcomes of the fast path are exercised, and the general path too
+    assert(fast > 300 && fastSome > 100 && fast - fastSome > 50 && fast < 1800,
+      s"fast=$fast fastSome=$fastSome")
   }
 
   test("AVI encode ⇄ decode round-trips random geometry, fps, frame count, " +

@@ -256,13 +256,138 @@ class WarcSplitSpec extends AnyFunSuite {
     val gz = WarcBytes.encodeGzip(evil)
     // stored-block fallback can embed the magic VERBATIM in the stream;
     // decodeRange must still frame exactly 4 records
-    def readRange(off: Long, n: Int): Array[Byte] =
-      java.util.Arrays.copyOfRange(gz, off.toInt, off.toInt + n)
+    def readAt(off: Long, dst: Array[Byte], dstOff: Int, n: Int): Unit =
+      System.arraycopy(gz, off.toInt, dst, dstOff, n)
     val mid = gz.length / 2L
-    val out = (WarcSplit.decodeRange(readRange, gz.length.toLong, 0L, mid, "e.warc.gz") ++
-      WarcSplit.decodeRange(readRange, gz.length.toLong, mid, gz.length.toLong, "e.warc.gz"))
+    val out = (WarcSplit.decodeRange(readAt, gz.length.toLong, 0L, mid, "e.warc.gz") ++
+      WarcSplit.decodeRange(readAt, gz.length.toLong, mid, gz.length.toLong, "e.warc.gz"))
       .toVector
     assert(out.length == 4)
     assert(out.map(key).sorted == evil.map(key).sorted)
+  }
+
+  // ---- read window: ranges decoded through a small test window must
+  //      equal the default window (records AND positions) and whole-file
+
+  private def withBlock(r: graft.core.WarcRecord, bytes: Array[Byte]): graft.core.WarcRecord =
+    r.copy(fields = r.fields.map(f =>
+      if (f.name.equalsIgnoreCase("Content-Length")) f.copy(value = bytes.length.toString)
+      else f), bytes = bytes)
+
+  /** Incompressible bytes: gzip stores them, zstd keeps them literal. */
+  private def noise(n: Int, seed: Long): Array[Byte] = {
+    val rng = new scala.util.Random(seed)
+    Array.fill(n)(rng.nextInt(256).toByte)
+  }
+
+  /** Compressible text whose compressed zstd block is still large. */
+  private def words(n: Int, seed: Long): Array[Byte] = {
+    val rng = new scala.util.Random(seed)
+    val sb = new StringBuilder
+    while (sb.length < n) sb.append(rng.alphanumeric.take(1 + rng.nextInt(9)).mkString).append(' ')
+    sb.toString.take(n).getBytes("US-ASCII")
+  }
+
+  /** `n` records with small text blocks: sizes are then set per test. */
+  private def smallRecords(round: Int, n: Int): Seq[graft.core.WarcRecord] =
+    Synth.warcRecords(round = round, n = n).zipWithIndex.map { case (r, i) =>
+      withBlock(r, s"record $i of round $round\n".getBytes("US-ASCII"))
+    }
+
+  private val codecs = Seq("gzip", "zstd", "zstd+dict")
+
+  private def encode(codec: String, recs: Seq[graft.core.WarcRecord])
+      : (Array[Byte], String, Option[Array[Byte]], Long) = codec match {
+    case "gzip" => (WarcBytes.encodeGzip(recs), "gzip", None, 0L)
+    case "zstd" => (WarcBytes.encodeZstd(recs), "zstd", None, 0L)
+    case _ =>
+      val dict = ("window dictionary material " * 30).getBytes("UTF-8")
+      (WarcBytes.encodeZstd(recs, dict = Some(dict)), "zstd", Some(dict), 8L + dict.length)
+  }
+
+  private def decodeSpan(bytes: Array[Byte], format: String, dict: Option[Array[Byte]],
+                         contentStart: Long, start: Long, end: Long,
+                         windowBytes: Int): Vector[graft.core.WarcRecord] = {
+    def readAt(off: Long, dst: Array[Byte], dstOff: Int, n: Int): Unit =
+      System.arraycopy(bytes, off.toInt, dst, dstOff, n)
+    WarcSplit.decodeRange(readAt, bytes.length.toLong, start, end, "w", format = format,
+      dict = dict, contentStart = contentStart, windowBytes = windowBytes).toVector
+  }
+
+  /** Every `splitBytes` range, decoded through a `windowBytes` window. */
+  private def decodeSplits(bytes: Array[Byte], format: String, dict: Option[Array[Byte]],
+                           contentStart: Long, splitBytes: Long,
+                           windowBytes: Int): Vector[graft.core.WarcRecord] =
+    (0L until bytes.length.toLong by splitBytes).toVector.flatMap { s =>
+      decodeSpan(bytes, format, dict, contentStart, s,
+        math.min(s + splitBytes, bytes.length.toLong), windowBytes)
+    }
+
+  private def posKeys(rs: Seq[graft.core.WarcRecord]) = rs.map(r => (r.position, key(r)))
+
+  test("read window: members straddling its edge or larger than it decode " +
+    "exactly (gzip, zstd, dictionary zstd)") {
+    val recs = smallRecords(round = 21, n = 40).zipWithIndex.map { case (r, i) =>
+      if (i % 7 == 3) withBlock(r, noise(6000 + 3000 * (i % 3), i)) else r
+    }
+    for (codec <- codecs) {
+      val (bytes, format, dict, cs) = encode(codec, recs)
+      val fileLen = bytes.length.toLong
+      val reference = decodeSpan(bytes, format, dict, cs, 0L, fileLen, 256 << 10)
+      assert(reference.map(key).sorted == recs.map(key).sorted, codec)
+      val whole =
+        (if (format == "gzip") WarcBytes.decodeGzip(bytes, "w") else WarcBytes.decodeZstd(bytes, "w"))
+      assert(reference.map(key) == whole.map(key), codec)
+      val memberLens = (reference.map(_.position) :+ fileLen).sliding(2).map(p => p(1) - p(0)).toSeq
+      // consecutive window sizes put the window edge on every byte of
+      // some member's head (gzip header, frame header, first block)
+      for (windowBytes <- (1000 to 1040) :+ 4096; splitBytes <- Seq(3000L, 20000L, fileLen)) {
+        // the cases under test really occur: a member larger than the
+        // window, and members (of several) inside one window
+        assert(memberLens.exists(_ > windowBytes) && memberLens.exists(_ < windowBytes / 2))
+        val got = decodeSplits(bytes, format, dict, cs, splitBytes, windowBytes)
+        assert(posKeys(got) == posKeys(reference),
+          s"$codec window=$windowBytes split=$splitBytes")
+      }
+    }
+  }
+
+  test("read window: a mid-file range whose first member lies past the first window") {
+    val base = smallRecords(round = 22, n = 8)
+    val recs = base.updated(1, withBlock(base(1), noise(50000, 22)))
+    for (codec <- codecs) {
+      val (bytes, format, dict, cs) = encode(codec, recs)
+      val fileLen = bytes.length.toLong
+      val reference = decodeSpan(bytes, format, dict, cs, 0L, fileLen, 256 << 10)
+      val start = reference(1).position + 10 // inside the 50 KB member
+      assert(reference(2).position - start > 4096, codec)
+      val got = decodeSpan(bytes, format, dict, cs, start, fileLen, 4096)
+      assert(posKeys(got) == posKeys(reference.drop(2)), codec)
+      // and the range before it still owns the big member
+      val head = decodeSpan(bytes, format, dict, cs, 0L, start, 4096)
+      assert(posKeys(head) == posKeys(reference.take(2)), codec)
+    }
+  }
+
+  test("read window: a zstd member whose validation bytes run past the window " +
+    "end is validated again, not skipped") {
+    val base = smallRecords(round = 23, n = 6)
+    val recs = base.updated(2, withBlock(base(2), words(60000, 23)))
+    for (codec <- Seq("zstd", "zstd+dict")) {
+      val (bytes, format, dict, cs) = encode(codec, recs)
+      val fileLen = bytes.length.toLong
+      val reference = decodeSpan(bytes, format, dict, cs, 0L, fileLen, 256 << 10)
+      val start = reference(1).position + 1 // scan from inside member 1
+      val candidate = reference(2).position
+      val windowBytes = 4096
+      // the candidate lies in the first window, but its first block does
+      // not: validated with only the window's bytes it looks like no member
+      assert(candidate - start < windowBytes / 2, codec)
+      assert(!WarcSplit.isZstdMemberStart(bytes, candidate.toInt,
+        (start + windowBytes).toInt, dict), codec)
+      assert(WarcSplit.isZstdMemberStart(bytes, candidate.toInt, bytes.length, dict), codec)
+      val got = decodeSpan(bytes, format, dict, cs, start, fileLen, windowBytes)
+      assert(posKeys(got) == posKeys(reference.drop(2)), codec)
+    }
   }
 }
